@@ -403,7 +403,8 @@ def main() -> int:
         try:
             plans.QUERIES[name].fn(spark, warm_dir).count()
         except Exception:
-            plans.QUERIES["q1_pricing_summary"].fn(spark, sf_dir).collect()
+            print(f"# warm-up {name}: failed", file=sys.stderr)
+            raise
         release_seams()
     # drain the warmup's accumulated garbage before the first timed run
     gc_quiesce(spark)

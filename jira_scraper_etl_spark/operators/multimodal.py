@@ -1317,6 +1317,11 @@ def _decode_jpeg_entropy(buf: bytes, return_coefs: bool = False) -> tuple:
                 bits = list(seg[i + 1:i + 17])
                 nv = sum(bits)
                 vals = list(seg[i + 17:i + 17 + nv])
+                if not tc_th >> 4 and max(vals, default=0) > 15:
+                    # a DC symbol is a magnitude bit count, and
+                    # _BitReader.bits reads at most 16 bits
+                    raise ValueError(
+                        f"DC Huffman table has category {max(vals)} > 15")
                 dec = _huffman_decoder(bits, vals)
                 if tc_th >> 4:
                     ac_tab = dec
@@ -1333,8 +1338,10 @@ def _decode_jpeg_entropy(buf: bytes, return_coefs: bool = False) -> tuple:
         raise ValueError("JPEG missing SOF/DHT before SOS")
     q = qt[tq]
 
-    br = _BitReader(buf, scan_start)
     n_blocks = (w // 8) * (h // 8)
+    if n_blocks == 0:
+        raise ValueError(f"JPEG {w}x{h} holds no 8x8 block")
+    br = _BitReader(buf, scan_start)
     prev_dc, coef_sum, n_nonzero, px = 0, 0, 0, []
     all_coefs = []
     for _ in range(n_blocks):
@@ -1409,15 +1416,19 @@ def decode_jpeg_pixels_batch(bufs) -> list:
     import numpy as np
 
     metas, blocks = [], []
-    for buf in bufs:
-        w, h, px, coef_sum, n_nonzero, _ = _decode_jpeg_entropy(buf)
+    for i, buf in enumerate(bufs):
+        try:
+            w, h, px, coef_sum, n_nonzero, _ = _decode_jpeg_entropy(buf)
+        except ValueError as exc:
+            raise ValueError(f"image {i} of the batch: {exc}") from exc
         metas.append((w, h, len(blocks), len(px), coef_sum, n_nonzero))
         blocks.extend(px)
-    if blocks:
-        pixels = _idct_blocks_np(blocks).reshape(len(blocks), 64)
-        sums = pixels.sum(axis=1)
-        mins = pixels.min(axis=1)
-        maxs = pixels.max(axis=1)
+    if not metas:
+        return []
+    pixels = _idct_blocks_np(blocks).reshape(len(blocks), 64)
+    sums = pixels.sum(axis=1)
+    mins = pixels.min(axis=1)
+    maxs = pixels.max(axis=1)
     out = []
     for w, h, start, nb, coef_sum, n_nonzero in metas:
         end = start + nb

@@ -111,12 +111,16 @@ def join_skewed_peers_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     hb = F.date_trunc("hour", F.col("ts"))
     a = ev.select("event_id", "event_type", "ts").withColumn("hb", hb)
     phb = F.date_trunc("hour", F.col("peer_ts"))
+    # both sides are the full events table: the merge hint pins the
+    # shuffle join a 100 TB peer side gets (at test scale the planner
+    # would broadcast it instead)
     b = (ev.select(F.col("event_id").alias("peer_id"),
                    F.col("event_type").alias("peer_type"),
                    F.col("ts").alias("peer_ts"),
                    F.col("value").alias("peer_value"))
          .withColumn("phb", F.explode(F.array(
-             phb, phb + F.expr("INTERVAL 1 HOUR")))))
+             phb, phb + F.expr("INTERVAL 1 HOUR"))))
+         .hint("merge"))
     joined = a.join(
         b,
         (b["peer_type"] == a["event_type"]) & (b["phb"] == a["hb"])

@@ -64,14 +64,6 @@ RAW_ISSUE_SCHEMA = _struct(
     ),
 )
 
-# HTTP page envelope: {"issues": [...], "total": N, "startAt": N, "maxResults": N}
-PAGE_SCHEMA = _struct(
-    issues=T.ArrayType(RAW_ISSUE_SCHEMA),
-    total=L,
-    startAt=L,
-    maxResults=L,
-)
-
 QA_PAIR_SCHEMA = _struct(question=S, answer=S)
 
 OUT_COMMENT_SCHEMA = _struct(author=S, body=S, created=S)

@@ -74,21 +74,23 @@ def checkpoint_seam(df: DataFrame) -> DataFrame:
     return out
 
 
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Drop a localCheckpoint frame's RDD blocks. Best-effort JVM-
-    internal access (LogicalRDD.rdd is stable across Spark 3.x/4.x);
-    if the accessor ever moves, the blocks simply fall back to the
-    pre-round-14 behavior — reclaimed by the ContextCleaner at the
-    next JVM GC — so failure here is silent by design."""
+def _unpersist_checkpoint(df: DataFrame) -> bool:
+    """Drop a localCheckpoint frame's RDD blocks; returns whether that
+    succeeded. Best-effort JVM-internal access (LogicalRDD.rdd is
+    stable across Spark 3.x/4.x); if the accessor ever moves, the
+    blocks fall back to being reclaimed by the ContextCleaner at the
+    next JVM GC, so a failure here does not raise."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        return True
     except Exception:
-        pass
+        return False
 
 
 def release_seams(session=None) -> int:
-    """Unpersist every outstanding seam; returns how many were
-    released. Safe at any point — a seam whose result the caller has
+    """Unpersist every outstanding seam; returns how many releases
+    succeeded (a failed unpersist is dropped from the registry but not
+    counted). Safe at any point — a seam whose result the caller has
     already materialized releases without recompute, and blocking is
     not requested so executors drop blocks asynchronously.
 
@@ -112,9 +114,7 @@ def release_seams(session=None) -> int:
             n += 1
         except Exception:
             pass  # session already stopped — nothing to release
-    for df in cp_frames:
-        _unpersist_checkpoint(df)
-        n += 1
+    n += sum(_unpersist_checkpoint(df) for df in cp_frames)
     return n
 
 

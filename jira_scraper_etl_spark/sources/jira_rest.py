@@ -83,7 +83,7 @@ COMMENT_TYPE = T.StructType([
 ])
 
 ISSUE_SCHEMA = T.StructType([
-    T.StructField("key", T.StringType(), False),
+    T.StructField("key", T.StringType()),
     T.StructField("project", T.StringType()),
     T.StructField("summary", T.StringType()),
     T.StructField("description", T.StringType()),
@@ -116,7 +116,6 @@ class SourceConfig:
     timeout_seconds: float = 15.0
     verify_ssl: bool = True
     incremental: bool = False
-    lookback_days: int = 7
     checkpoint_dir: str | None = None
     pages_per_partition: int = 4
     max_partitions: int = 64
@@ -147,7 +146,6 @@ class SourceConfig:
             timeout_seconds=get("timeout_seconds", float, 15.0),
             verify_ssl=get("verify_ssl", truthy, True),
             incremental=get("incremental", truthy, False),
-            lookback_days=get("lookback_days", int, 7),
             checkpoint_dir=options.get("checkpoint_dir"),
             pages_per_partition=get("pages_per_partition", int, 4),
             max_partitions=get("max_partitions", int, 64),
@@ -169,6 +167,9 @@ def build_jql(cfg: SourceConfig, last_updated: str | None) -> str:
     Preserves the reference's date-granularity cutoff quirk: the ISO
     timestamp is truncated to its date, so same-day issues are re-read
     (documented in SURVEY.md §7.3; dedup-by-key downstream absorbs it).
+    The reference's ``now() - lookback_days`` fallback is not kept: a
+    first incremental run with no checkpoint has no cutoff and scans
+    every issue of the project.
     """
     jql = f"project = {cfg.project}"
     cutoff: str | None = None
@@ -335,34 +336,39 @@ def fetch_page(transport: Callable[[dict], tuple[int, Any]],
 
 
 def issue_to_row(raw: dict) -> tuple:
-    """Project a nested raw issue onto ISSUE_SCHEMA (null-safe, parity
-    with transformer.py:245-268). Values stay raw — cleaning belongs to
-    the silver transform, not the scan."""
+    """Project a nested raw issue onto ISSUE_SCHEMA — the engine's only
+    nested→flat mapping (parity with transformer.py:245-268), used by the
+    scan and by ``operators.transform.transform_issues`` alike. A null
+    struct takes its default (``"Unknown"`` for status and for a
+    comment's author, else null); a present struct yields its field even
+    when that field is null. Null comment entries are dropped; null
+    component entries stay as null names. Values stay raw — cleaning
+    belongs to the silver transform, not the scan."""
     f = raw.get("fields") or {}
-    def name(k):
-        v = f.get(k)
-        return v.get("name") if isinstance(v, dict) else None
-    def display(k):
-        v = f.get(k)
-        return v.get("displayName") if isinstance(v, dict) else None
+
+    def sub(v, key, default=None):
+        return v.get(key) if isinstance(v, dict) else default
+
     comments = [
-        ((c.get("author") or {}).get("displayName"), c.get("body"), c.get("created"))
-        for c in ((f.get("comment") or {}).get("comments") or []) if c
+        (sub(c.get("author"), "displayName", "Unknown"), c.get("body"),
+         c.get("created"))
+        for c in ((f.get("comment") or {}).get("comments") or [])
+        if c is not None
     ]
     return (
         raw.get("key"),
-        (f.get("project") or {}).get("key"),
+        sub(f.get("project"), "key"),
         f.get("summary"),
         f.get("description"),
-        name("status") or "Unknown",
-        name("priority"),
-        display("reporter"),
-        display("assignee"),
-        name("issuetype"),
+        sub(f.get("status"), "name", "Unknown"),
+        sub(f.get("priority"), "name"),
+        sub(f.get("reporter"), "displayName"),
+        sub(f.get("assignee"), "displayName"),
+        sub(f.get("issuetype"), "name"),
         f.get("created"),
         f.get("updated"),
         list(f.get("labels") or []),
-        [c.get("name") for c in (f.get("components") or []) if isinstance(c, dict)],
+        [sub(c, "name") for c in (f.get("components") or [])],
         comments,
     )
 

@@ -54,7 +54,6 @@ class PipelineConfig:
     retry_backoff_base: float = 2.0
     max_retries: int = 5
     incremental: bool = False
-    lookback_days: int = 7
     verify_ssl: bool = True
     transport: str = "requests"
     synthetic_total: int = 200
@@ -81,7 +80,6 @@ def _source_options(cfg: PipelineConfig, project: str) -> dict:
         "retry_backoff_base": str(cfg.retry_backoff_base),
         "max_retries": str(cfg.max_retries),
         "incremental": str(cfg.incremental).lower(),
-        "lookback_days": str(cfg.lookback_days),
         "verify_ssl": str(cfg.verify_ssl).lower(),
         "checkpoint_dir": cfg.dir("checkpoints"),
         "transport": cfg.transport,

@@ -128,6 +128,31 @@ def test_issue_to_row_null_safety():
     assert d["labels"] == [] and d["comments"] == []
 
 
+def test_flat_path_keeps_present_struct_nulls(spark):
+    """issue_to_row → transform_flat_issues on the inputs where the ETL
+    path once drifted from the nested-row semantics: a present status
+    struct with a null name stays null, a present author struct with a
+    null displayName stays null (a null author struct is "Unknown"), a
+    null comment entry is dropped, and a null component entry stays a
+    null name."""
+    from jira_scraper_etl_spark.operators.transform import transform_flat_issues
+
+    raw = {"key": "ENG-9", "fields": {
+        "summary": "Drift inputs", "status": {"name": None},
+        "components": [None, {"name": "core"}],
+        "comment": {"comments": [
+            {"author": {"displayName": None}, "body": "first comment body"},
+            {"author": None, "body": "second comment body"},
+            None,
+        ]},
+    }}
+    flat = spark.createDataFrame([J.issue_to_row(raw)], J.ISSUE_SCHEMA)
+    r = transform_flat_issues(flat).first()
+    assert r.status is None
+    assert [c.author for c in r.comments] == [None, "Unknown"]
+    assert list(r.components) == [None, "core"]
+
+
 # -- partition planning ------------------------------------------------------
 
 def test_partition_planning_page_ranges():

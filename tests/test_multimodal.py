@@ -626,6 +626,34 @@ def test_jpeg_batch_decode_bit_identical_to_per_image():
         MM.decode_jpeg_pixels(bufs[0])]
 
 
+def test_jpeg_zero_block_image_raises_per_image_error():
+    """An image narrower or shorter than one 8x8 block has nothing to
+    decode: it must fail with a ValueError naming the image — alone, or
+    inside a batch next to valid images — not a NameError or an empty
+    min() over the batch."""
+    good = MM.encode_baseline_jpeg(16, 8, MM.jpeg_coefs_for_doc(1))
+    for w, h in ((0, 8), (8, 0)):
+        empty = MM.encode_baseline_jpeg(w, h, [])
+        with pytest.raises(ValueError, match=f"{w}x{h} holds no 8x8 block"):
+            MM.decode_jpeg_pixels(empty)
+        with pytest.raises(ValueError, match="image 0 of the batch"):
+            MM.decode_jpeg_pixels_batch([empty])
+        with pytest.raises(ValueError, match="image 1 of the batch"):
+            MM.decode_jpeg_pixels_batch([good, empty])
+
+
+def test_jpeg_rejects_dc_category_above_15():
+    """A DC Huffman symbol is a magnitude bit count; the bit reader
+    reads at most 16 bits, so a DHT carrying a DC category above 15 is
+    rejected when the table is decoded."""
+    buf = MM.encode_baseline_jpeg(16, 8, MM.jpeg_coefs_for_doc(1))
+    dc_table = bytes(MM.JPEG_DC_BITS) + bytes(MM.JPEG_DC_VALS)
+    assert buf.count(dc_table) == 1
+    bad = buf.replace(dc_table, dc_table[:-1] + bytes([16]))
+    with pytest.raises(ValueError, match="DC Huffman table has category 16"):
+        MM.decode_jpeg_pixels(bad)
+
+
 def test_jpeg_batched_idct_bit_identical_to_scalar_spec():
     """_idct_blocks_np must equal idct_block_int element-for-element —
     int64 numpy contractions are exact, so any divergence is an

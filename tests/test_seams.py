@@ -98,6 +98,24 @@ def test_checkpoint_seam_releases_rdd_blocks(spark):
     assert _settle(spark, base) <= base
 
 
+def test_release_counts_only_successful_releases(spark):
+    """A checkpoint seam whose unpersist fails leaves the registry but
+    is not counted as released."""
+
+    class BrokenFrame:
+        @property
+        def _jdf(self):
+            raise RuntimeError("JVM accessor moved")
+
+    seams.release_seams()
+    seams.checkpoint_seam(spark.range(10))
+    with seams._LOCK:
+        seams._OUTSTANDING_CP.setdefault(id(spark), []).append(BrokenFrame())
+    assert seams.outstanding() == 2
+    assert seams.release_seams() == 1
+    assert seams.outstanding() == 0
+
+
 def test_release_is_idempotent_and_returns_count(spark, sf_dir):
     seams.release_seams()
     df = seams.persist_seam(
